@@ -70,13 +70,16 @@ object OracleSql {
        |      (acc, x) -> (acc * 31 + x) % $U64)""".stripMargin
 
   // ----------------------------------------------------------- dedup_minhash
-  /** Full MinHash+LSH replay: shingle fingerprints, the affine lane family
-    * a_i·fp+b_i mod 2^61-1 of [[VectorExpressions.MinhashSig]] (the product
-    * reaches 2^99 — HUGEINT carries it; the engine uses multiplyHigh),
-    * band-slice candidacy (16 bands × 4 rows), and the estimated-Jaccard
-    * filter. */
-  private val minhashCandCte: String =
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+  /** Full MinHash+LSH replay: shingle fingerprints, the affine lanes
+    * a_i·fp+b_i mod 2^61-1 of [[VectorExpressions.minhashLanes]] rendered
+    * as literal lists (the product reaches 2^93 — HUGEINT carries it; the
+    * engine uses multiplyHigh), band-slice candidacy (16 bands × 4 rows),
+    * and the estimated-Jaccard filter. */
+  private val minhashCandCte: String = {
+    val (la, lb) = VectorExpressions.minhashLanes(64)
+    s"""WITH lanes AS (SELECT ${la.mkString("[", ", ", "]")}::HUGEINT[] AS la,
+       |  ${lb.mkString("[", ", ", "]")}::HUGEINT[] AS lb),
+       |toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
        |sh AS (SELECT doc_id,
        |  list_distinct([array_to_string(t[i:i+4], ' ')
        |                 FOR i IN generate_series(1, greatest(len(t) - 4, 1))]) AS shs
@@ -85,10 +88,9 @@ object OracleSql {
        |  [${fp61("s")} FOR s IN shs] AS f
        |  FROM sh),
        |sigs AS (SELECT doc_id,
-       |  [list_min([(CAST(2654435761 * (i + 1) AS HUGEINT) * fp
-       |              + (40503 * (i + 1) + 12345)) % $M61
-       |             FOR fp IN f]) FOR i IN generate_series(0, 63)] AS sig
-       |  FROM fps),
+       |  [list_min([(la[i] * fp + lb[i]) % $M61
+       |             FOR fp IN f]) FOR i IN generate_series(1, 64)] AS sig
+       |  FROM fps, lanes),
        |cand AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.sig AS sa, b.sig AS sb
        |  FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
        |  WHERE len(list_filter([a.sig[4*bb+1:4*bb+4] = b.sig[4*bb+1:4*bb+4]
@@ -99,6 +101,7 @@ object OracleSql {
        |  FROM cand
        |  WHERE CAST(len(list_filter([sa[i] = sb[i] FOR i IN generate_series(1, 64)],
        |                             x -> x)) AS DOUBLE) / 64 >= 0.5)""".stripMargin
+  }
 
   val dedupMinhashSql: String =
     s"""$minhashCandCte

@@ -36,7 +36,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * (`_graft_log` present): `VERSION AS OF n` pins the exact file set commit
   * `n` recorded, and `TIMESTAMP AS OF t` picks the last snapshot committed
   * at or before `t` — Iceberg's snapshot-id / as-of-timestamp semantics on
-  * the sink's own log. Unversioned tables read the live directory.
+  * the sink's own log. Unversioned tables read the live directory. The
+  * catalog never parses the log itself: versions, snapshot file sets,
+  * pending merge-on-read sidecars, branch heads and tags all resolve
+  * through a [[TableSink]] over the table ([[logSink]]), so the SQL door
+  * and the library read one format through one reader.
   *
   * Writes: `CREATE TABLE` / CTAS / `INSERT INTO` route the insert
   * through [[TableSink.append]] (V1 write bridge) — a SQL append
@@ -55,7 +59,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * table; scan planning, filter pushdown, and partition pruning
   * (hive-style directories, recovered via `basePath`) are stock.
   *
-  * Scale: `loadTable` touches only the manifest (one small text file) and
+  * Scale: `loadTable` touches only the snapshot file, its manifests and
   * directory metadata — no data I/O on the driver; file-set size is the
   * same O(files) Spark's own file index holds. All catalog metadata IO
   * goes through [[WarehouseIO]] (the Hadoop FileSystem API), so the SQL
@@ -84,9 +88,6 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
     new org.apache.hadoop.fs.Path(
       (warehouse +: (ident.namespace() :+ ident.name())).mkString("/"))
 
-  private def logDir(ident: Identifier): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(tableDir(ident), "_graft_log")
-
   private def isTableName(name: String): Boolean =
     !name.startsWith("_") &&
       !name.startsWith(".") && // swap scratch siblings (.t_rewriting, …)
@@ -104,84 +105,26 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
   override def tableExists(ident: Identifier): Boolean =
     isTableName(ident.name()) && WarehouseIO.isDir(tableDir(ident))
 
-  /** Snapshot versions recorded for the table, oldest first. */
-  private def versions(ident: Identifier): Seq[Int] =
-    WarehouseIO.childNames(logDir(ident))
-      .collect { case n if n.startsWith("v") && n.endsWith(".list") =>
-        n.stripPrefix("v").stripSuffix(".list").toInt }
-      .sorted
-
-  private def manifestPath(ident: Identifier, v: Int): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(logDir(ident), f"v$v%05d.list")
-
-  /** Snapshot versions at or before `upTo` carrying UNMATERIALIZED
-    * merge-on-read delete sidecars (predicate SQL, key lists, position
-    * lists). Catalog reads of such tables serve through the LIBRARY read
-    * ([[TableSink.readVersion]], which applies every sidecar flavor) via
-    * a [[ProjectedScanBuilder]] — the raw V2 file scan would resurrect
-    * deleted rows. Only the BRANCH resolution path still refuses: a
-    * branch head mixes staged appends with main-line sidecar history and
-    * has no single-version library read to delegate to. */
-  private def pendingDeleteVersions(ident: Identifier, upTo: Int): Seq[Int] = {
-    def lp(name: String) = new org.apache.hadoop.fs.Path(logDir(ident), name)
-    // ONE listing for every flavor probe (the per-version stat battery
-    // was a measured read-path tax); `#pos`-referenced sidecars (the
-    // MoR UPDATE/MERGE commit shape — atomic with the replacement
-    // appends, so missing them would serve BOTH copies) cost a
-    // version-file read only when some `pos-*` dir exists at all
-    val names = WarehouseIO.childNames(logDir(ident)).toSet
-    val anyRef = names.exists(n => n.startsWith("pos-") ||
-      n.startsWith("keys-") || n.startsWith("del-"))
-    versions(ident).filter(v => v <= upTo && (
-      names(f"v$v%05d.deletes") ||
-        names(f"v$v%05d_keys") ||
-        names(f"v$v%05d_pos") ||
-        (anyRef && names(f"v$v%05d.list") && {
-          val (p, k, d) = WarehouseIO.snapshotSidecarRefs(
-            lp(f"v$v%05d.list"))
-          (p.toSeq ++ k.toSeq ++ d.toSeq).exists(names)
-        })))
-  }
-
-  private def requireNoPendingDeletes(ident: Identifier, upTo: Int): Unit = {
-    val pending = pendingDeleteVersions(ident, upTo)
-    if (pending.nonEmpty) throw new IllegalArgumentException(
-      s"${ident.name()}: snapshots ${pending.mkString(", ")} carry pending " +
-        "merge-on-read delete predicates this resolution path cannot " +
-        "apply; materialize them first (TableSink.compact) or read " +
-        "through TableSink")
-  }
+  /** The [[TableSink]] over the table's snapshot log — the one reader
+    * of `_graft_log` names: versions, snapshot file sets, delete-sidecar
+    * references, branch heads and tags all resolve through it. */
+  private def logSink(ident: Identifier): TableSink =
+    new TableSink(SinkConfig(tableName = ident.name(),
+      warehousePath = warehouse,
+      location = Some(tableDir(ident).toString)))
 
   /** The absolute data-file paths snapshot `v` recorded. Does NOT check
-    * for pending merge-on-read sidecars — callers either serve through
-    * the library read (which applies them) or refuse explicitly. */
-  private def manifestFiles(ident: Identifier, v: Int): Seq[String] = {
-    val m = manifestPath(ident, v)
-    // NOT NoSuchTableException: the analyzer rewrites that into its generic
-    // table-not-found error, burying WHICH snapshot is missing — and the
-    // table itself does exist
-    if (!WarehouseIO.exists(m))
-      throw new IllegalArgumentException(
-        s"${ident.name()}: snapshot v$v does not exist (expired by a " +
-          "rewrite, or never committed); available: " +
-          versions(ident).mkString(", "))
-    // layered (manifest-list) or legacy inline snapshot — same resolver
-    // the sink uses, so the SQL door reads any table the library wrote.
-    // A shallow CLONE's manifest mixes ABSOLUTE entries (the source's
-    // files) with relative ones (own appends): absolute stays absolute
-    // (round-14 — prefixing tableDir mangled every clone read)
-    WarehouseIO.readSnapshotFiles(logDir(ident), m)
-      .map(rel => if (rel.startsWith("/")) rel
-        else s"${tableDir(ident)}/$rel").toIndexedSeq
-  }
-
-  /** A shallow clone's log carries the `clone_base` sidecar; its head
-    * mixes file roots, so the raw V2 file scan (single basePath) cannot
-    * serve it — clone idents route through the library read, which
-    * loads each root under its own layout. */
-  private def isClone(ident: Identifier): Boolean =
-    WarehouseIO.isFile(
-      new org.apache.hadoop.fs.Path(logDir(ident), "clone_base"))
+    * for pending merge-on-read sidecars — callers serve through the
+    * library read (which applies them) when [[TableSink.hasPendingDeletes]]
+    * says so. A shallow CLONE's manifest mixes ABSOLUTE entries (the
+    * source's files) with relative ones (own appends): absolute stays
+    * absolute. A missing snapshot fails naming the table and version
+    * (never NoSuchTableException: the analyzer rewrites that into its
+    * generic table-not-found error, and the table does exist). */
+  private def snapshotFiles(ident: Identifier, sink: TableSink,
+      v: Int): Seq[String] =
+    sink.manifestFiles(v).map(rel => if (rel.startsWith("/")) rel
+      else s"${tableDir(ident)}/$rel").toIndexedSeq
 
   /** Serve a shallow clone's snapshot `v` through the library read
     * pinned to it (the same projected-table shape as branch-under-MoR
@@ -264,7 +207,8 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
         }
       },
       versioned = one("versioned").contains("true") ||
-        WarehouseIO.isDir(logDir(ident)) ||
+        WarehouseIO.isDir(
+          new org.apache.hadoop.fs.Path(tableDir(ident), "_graft_log")) ||
         WarehouseIO.exists(versionedMarker(ident)))
   }
 
@@ -539,9 +483,7 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
     val marker = WarehouseIO.scratchSiblings(tableDir(ident))
       .find(_.getName.endsWith("_swap"))
     if (!marker.exists(WarehouseIO.isFile)) return
-    new TableSink(SinkConfig(tableName = ident.name(),
-      warehousePath = warehouse,
-      location = Some(tableDir(ident).toString))).recoverSwap()
+    logSink(ident).recoverSwap()
   }
 
   override def loadTable(ident: Identifier): Table = {
@@ -555,14 +497,14 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
       // as a table through the by-name door SHOW TABLES never lists
       throw new NoSuchTableException(ident)
     }
-    versions(ident).lastOption match {
+    val sink = logSink(ident)
+    sink.snapshotVersions().lastOption match {
       case Some(v) =>
-        if (isClone(ident)) return cloneProjected(ident, v)
-        val files = manifestFiles(ident, v)
+        if (sink.cloneBasePath.isDefined) return cloneProjected(ident, v)
+        val files = snapshotFiles(ident, sink, v)
         fileTable(ident, files, files.headOption, declaredSchema(ident),
           writable = true,
-          morVersion =
-            if (pendingDeleteVersions(ident, v).nonEmpty) Some(v) else None)
+          morVersion = Some(v).filter(sink.hasPendingDeletes))
       case None =>
         firstDataFile(ident) match {
           case Some(first) =>
@@ -586,75 +528,54 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
   override def loadTable(ident: Identifier, version: String): Table = {
     healInterruptedSwap(ident)
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
+    val sink = logSink(ident)
+    def refused = new IllegalArgumentException(
+      s"${ident.name()}: '$version' is neither an integer snapshot id " +
+        "nor a live branch or tag name")
     val (files, pinned) = version.toIntOption match {
       case Some(v) =>
-        if (isClone(ident)) return cloneProjected(ident, v)
-        (manifestFiles(ident, v), Some(v))
+        if (sink.cloneBasePath.isDefined) return cloneProjected(ident, v)
+        (snapshotFiles(ident, sink, v), Some(v))
       case None =>
         // Same name charset TableSink.branchLogPath enforces on write:
         // anything else (slashes, '..') must not resolve as a path.
-        if (!version.matches("[A-Za-z0-9_-]+"))
-          throw new IllegalArgumentException(
-            s"${ident.name()}: '$version' is neither an integer snapshot id " +
-              "nor a live branch or tag name")
-        val dir =
-          new org.apache.hadoop.fs.Path(logDir(ident), s"branch_$version")
-        val head: Option[Int] = WarehouseIO.childNames(dir)
-          .collect { case n if n.startsWith("v") && n.endsWith(".list") =>
-            n.stripPrefix("v").stripSuffix(".list").toInt }
-          .sorted.lastOption
-        head match {
+        if (!version.matches("[A-Za-z0-9_-]+")) throw refused
+        sink.branchVersions(version).lastOption match {
           case Some(v) =>
             // a branch head mixes staged appends with main-line sidecar
             // history: under pending MoR sidecars it serves through the
             // LIBRARY two-slice read (TableSink.readBranch — sidecars
             // committed <= the branch base apply to the base slice,
-            // staged appends read raw; round-12, the refusal deleted).
-            // Only a PRE-round-12 branch (no recorded base) still
-            // refuses — it was creatable only with zero sidecars, so
-            // hitting this means out-of-band log surgery.
-            val cfg0 = insertConfig(ident, firstDataFile(ident))
-            val sink0 = new TableSink(cfg0)
-            val pendingHead = versions(ident).lastOption
-              .map(pendingDeleteVersions(ident, _)).getOrElse(Nil)
-            if (pendingHead.nonEmpty) {
-              sink0.branchBaseVersion(version) match {
-                case Some(_) =>
-                  val declared = declaredSchema(ident)
-                  val sink = new TableSink(
-                    cfg0.copy(tableSchema = declared.orElse(cfg0.tableSchema)))
-                  val compute = () =>
-                    sink.readBranch(SparkSession.active, version)
-                  val sch = declared.getOrElse(compute().schema)
-                  return new GraftProjectedTable(ident.toString, sch,
-                    compute, None)
-                case None => requireNoPendingDeletes(ident, v)
-              }
+            // staged appends read raw)
+            if (sink.snapshotVersions().lastOption
+                .exists(sink.hasPendingDeletes)) {
+              val cfg0 = insertConfig(ident, firstDataFile(ident))
+              val declared = declaredSchema(ident)
+              val branchSink = new TableSink(
+                cfg0.copy(tableSchema = declared.orElse(cfg0.tableSchema)))
+              val compute = () =>
+                branchSink.readBranch(SparkSession.active, version)
+              val sch = declared.getOrElse(compute().schema)
+              return new GraftProjectedTable(ident.toString, sch, compute,
+                None)
             }
             // branch snapshots reference manifests in the MAIN log dir
-            (WarehouseIO.readSnapshotFiles(logDir(ident),
-              new org.apache.hadoop.fs.Path(dir, f"v$v%05d.list"))
+            (sink.branchManifest(version, v)
               .map(rel => s"${tableDir(ident)}/$rel").toIndexedSeq, None)
           case None =>
             // not a branch — a TAG resolves to the pinned snapshot
             // (Iceberg's VERSION AS OF accepts branch and tag names alike;
             // branches win on a name collision, checked first above)
-            val tag =
-              new org.apache.hadoop.fs.Path(logDir(ident), s"tag_$version")
-            if (!WarehouseIO.isFile(tag))
-              throw new IllegalArgumentException(
-                s"${ident.name()}: '$version' is neither an integer " +
-                  "snapshot id nor a live branch or tag name")
-            val tv = WarehouseIO.readString(tag).trim.toInt
-            if (isClone(ident)) return cloneProjected(ident, tv)
-            (manifestFiles(ident, tv).toIndexedSeq, Some(tv))
+            val tv = scala.util.Try(sink.tagVersion(version))
+              .getOrElse(throw refused)
+            if (sink.cloneBasePath.isDefined) return cloneProjected(ident, tv)
+            (snapshotFiles(ident, sink, tv), Some(tv))
         }
     }
     // declared schema governs historical reads too: a snapshot older than
     // an ADD COLUMNS reads NULL-filled, never schema-shifted mid-query
     fileTable(ident, files, files.headOption, declaredSchema(ident),
-      morVersion = pinned.filter(v =>
-        pendingDeleteVersions(ident, v).nonEmpty))
+      morVersion = pinned.filter(sink.hasPendingDeletes))
   }
 
   /** `TIMESTAMP AS OF t` (micros since epoch): the last snapshot committed
@@ -663,17 +584,14 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
     healInterruptedSwap(ident)
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    val vs = versions(ident)
-    if (vs.isEmpty) throw new IllegalArgumentException(
-      s"table ${ident.name()} has no snapshot log (unversioned); " +
-        "TIMESTAMP AS OF needs versioned=true commits")
-    val cutoffMs = timestampMicros / 1000L
-    val v = vs.filter(v =>
-        WarehouseIO.modifiedAtMs(manifestPath(ident, v)) <= cutoffMs)
-      .lastOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"${ident.name()}: no snapshot committed at or before timestamp " +
-          s"$timestampMicros"))
+    val sink = logSink(ident)
+    val v = sink.versionAtOrBefore(timestampMicros / 1000L).getOrElse(
+      throw new IllegalArgumentException(
+        if (sink.snapshotVersions().isEmpty)
+          s"table ${ident.name()} has no snapshot log (unversioned); " +
+            "TIMESTAMP AS OF needs versioned=true commits"
+        else s"${ident.name()}: no snapshot committed at or before " +
+          s"timestamp $timestampMicros"))
     loadTable(ident, v.toString)
   }
 
@@ -1002,9 +920,7 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
     new org.apache.hadoop.fs.Path(tableDir(ident), "_graft_renames")
 
   private def renamesOf(ident: Identifier): Map[String, String] =
-    new TableSink(SinkConfig(tableName = ident.name(),
-      warehousePath = warehouse,
-      location = Some(tableDir(ident).toString))).renameMap
+    logSink(ident).renameMap
 
   /** DROP also reclaims the table's swap scratch siblings (rewrite tmp,
     * crash trash) — and succeeds when ONLY those exist: a table that

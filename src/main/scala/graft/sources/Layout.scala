@@ -223,23 +223,13 @@ final class ZoneMaps(sink: TableSink) {
       .write.mode("overwrite").parquet(statsPath)
   }
 
-  /** Per-bound keep-predicate over the MANIFEST stats frame (`z` map of
-    * col → [min,max] strings): a file with no entry for a bound's column
-    * is unanalyzed-for-that-column and must survive; an entry with null
-    * min/max (all-null zone) can satisfy no range and prunes. */
+  /** Keep-predicate over the MANIFEST stats frame: every bound's zone
+    * must intersect ([[TableSink.zoneKeep]]). */
   private def manifestKeep(spark: SparkSession,
       bounds: Seq[(String, Column, Column)]): Column = {
     val schema = sink.read(spark).schema
     bounds.map { case (c, lo, hi) =>
-      val dt = schema(c).dataType.sql
-      val entry = element_at(col("z"), c)
-      // TIMESTAMP bounds persist as epoch micros; a legacy session-
-      // rendered entry is unparseable-absolutely → keep (unanalyzed)
-      val zmin = TableSink.zoneBound(entry.getItem(0), dt)
-      val zmax = TableSink.zoneBound(entry.getItem(1), dt)
-      when(entry.isNull || TableSink.zoneLegacy(entry.getItem(0), dt) ||
-          TableSink.zoneLegacy(entry.getItem(1), dt), lit(true))
-        .otherwise(coalesce(zmax >= lo && zmin <= hi, lit(false)))
+      TableSink.zoneKeep(c, schema(c).dataType.sql, Some(lo), Some(hi))
     }.reduce(_ && _)
   }
 

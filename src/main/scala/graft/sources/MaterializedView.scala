@@ -53,8 +53,8 @@ final class MaterializedView(source: TableSink, path: String,
     else WarehouseIO.readString(reflectsFile(statePath)).trim
       .split(':') match {
         case Array(g, v) => (g, v.toInt)
-        case Array(v) => (source.logGeneration(), v.toInt) // legacy marker
-        case other => sys.error(s"unreadable view marker: ${other.mkString(":")}")
+        case other => sys.error(s"unreadable view marker at " +
+          s"${reflectsFile(statePath)}: '${other.mkString(":")}'")
       }
   }
 

@@ -100,22 +100,23 @@ object TableSink {
     if (dt.equalsIgnoreCase("TIMESTAMP")) unix_micros(v).cast("string")
     else v.cast("string")
 
-  /** Parse a persisted zone bound back to its typed value. TIMESTAMP
-    * entries written before the epoch-micros encoding (session-rendered,
-    * no designator) are NOT absolutely parseable — they yield NULL here
-    * and [[zoneLegacy]] flags them so probes keep the file. */
-  private[graft] def zoneBound(raw: Column, dt: String): Column =
-    if (dt.equalsIgnoreCase("TIMESTAMP"))
-      when(raw.rlike("^-?[0-9]+$"), timestamp_micros(raw.cast("long")))
-    else raw.cast(dt)
-
-  /** TRUE when `raw` is a legacy session-rendered TIMESTAMP bound whose
-    * instant cannot be recovered — the probe must treat the file as
-    * unanalyzed (keep), never prune on an unparseable bound. */
-  private[graft] def zoneLegacy(raw: Column, dt: String): Column =
-    if (dt.equalsIgnoreCase("TIMESTAMP"))
-      raw.isNotNull && !raw.rlike("^-?[0-9]+$")
-    else lit(false)
+  /** Zone-map keep predicate over a manifest stats frame's `z` map (col →
+    * [min, max] strings, [[zoneRender]]ed) for the bound `[lo, hi]` on
+    * column `c` of type `dt` (a None side is unbounded): a file with no
+    * entry for `c` is unanalyzed-for-that-column and survives; an entry
+    * with null min/max (all-null zone) can satisfy no range and prunes. */
+  private[graft] def zoneKeep(c: String, dt: String, lo: Option[Column],
+      hi: Option[Column]): Column = {
+    def bound(raw: Column): Column =
+      if (dt.equalsIgnoreCase("TIMESTAMP")) timestamp_micros(raw.cast("long"))
+      else raw.cast(dt)
+    val entry = element_at(col("z"), c)
+    val zmin = bound(entry.getItem(0))
+    val zmax = bound(entry.getItem(1))
+    val hit = (lo.map(zmax >= _).toSeq ++ hi.map(zmin <= _)).reduceOption(_ && _)
+    hit.fold(lit(true))(h => when(entry.isNull, lit(true))
+      .otherwise(coalesce(h, lit(false))))
+  }
 
   /** One registered Bloom column: filter geometry + the hashed type
     * (xxhash64 is type-sensitive — probes cast to `dtype` first). */
@@ -632,18 +633,7 @@ final class TableSink(val config: SinkConfig) {
             schema.fieldNames.exists(_.equalsIgnoreCase(c)) =>
         val dt = schema(schema.fieldIndex(
           schema.fieldNames.find(_.equalsIgnoreCase(c)).get)).dataType.sql
-        val entry = element_at(col("z"), c)
-        val zmin = TableSink.zoneBound(entry.getItem(0), dt)
-        val zmax = TableSink.zoneBound(entry.getItem(1), dt)
-        val hit = (lo, hi) match {
-          case (Some(l), Some(h)) => zmax >= l && zmin <= h
-          case (Some(l), None) => zmax >= l
-          case (None, Some(h)) => zmin <= h
-          case _ => lit(true)
-        }
-        when(entry.isNull || TableSink.zoneLegacy(entry.getItem(0), dt) ||
-            TableSink.zoneLegacy(entry.getItem(1), dt), lit(true))
-          .otherwise(coalesce(hit, lit(false)))
+        TableSink.zoneKeep(c, dt, lo, hi)
     }
     def bloomKeepOf(c: String, sp: TableSink.BloomSpec,
         values: Seq[Column]): Column = {
@@ -766,7 +756,7 @@ final class TableSink(val config: SinkConfig) {
 
   /** Stats-bearing entries of the HEAD snapshot as a DISTRIBUTED
     * DataFrame — (path [absolute], n, z, b); None when the table is
-    * unversioned, empty, legacy, or carries no stats entry at all. The
+    * unversioned, empty, or carries no stats entry at all. The
     * manifests are read by executors (text scan), the driver touches
     * only names: the same scale shape as the batch read's metadata. */
   private[graft] def manifestStatsDf(spark: SparkSession): Option[DataFrame] = {
@@ -777,7 +767,7 @@ final class TableSink(val config: SinkConfig) {
     // SQL scan PLANNING, so it must be cheap on stats-less tables)
     if (!WarehouseIO.isFile(statsSpecPath)) return None
     val head = snapshotVersions().lastOption.getOrElse(return None)
-    val names = manifestNames(head).getOrElse(return None)
+    val names = manifestNames(head)
     if (names.isEmpty) return None
     // cheap driver probe: any stats line at all? (names-only readers kept
     // honest — this reads content, so it counts as manifest reads)
@@ -855,8 +845,8 @@ final class TableSink(val config: SinkConfig) {
         added.distinct.sorted.map(r =>
           stats.get(r).fold(r)(j => s"$r	$j"))))
     // a manifest WE created to represent the base (bootstrap listing of
-    // pre-existing unversioned data, or one-time migration of a legacy
-    // inline-list head) — superseded and deleted if the claim is lost
+    // pre-existing unversioned data) — superseded and deleted if the
+    // claim is lost
     var baseManifest: Option[String] = None
     var mergedManifest: Option[String] = None
     def dropBaseManifest(): Unit = {
@@ -898,19 +888,11 @@ final class TableSink(val config: SinkConfig) {
       // claim-to-retract instant, and only under a rewrite that already
       // violated the single-rewriter maintenance-window convention.
       val genBefore = logGeneration()
-      // O(manifest count) head read — a layered head contributes its
-      // manifest NAMES verbatim; a legacy inline-list head is migrated
-      // once (its list copied into a manifest); no head bootstraps from
-      // a one-time listing of pre-existing unversioned data
+      // O(manifest count) head read — the head contributes its manifest
+      // NAMES verbatim; no head bootstraps from a one-time listing of
+      // pre-existing unversioned data
       val headNames: Seq[String] = head match {
-        case Some(h) => manifestNames(h) match {
-          case Some(names) => names
-          case None =>
-            if (baseManifest.isEmpty)
-              baseManifest =
-                Some(WarehouseIO.writeManifest(logPath, manifestFiles(h)))
-            baseManifest.toSeq
-        }
+        case Some(h) => manifestNames(h)
         case None =>
           // a TXN (streaming) first commit must NOT bootstrap-sweep the
           // directory: a batch-0 attempt that crashed between its staged
@@ -984,8 +966,7 @@ final class TableSink(val config: SinkConfig) {
         // a branch whose base is at or above v sees the sidecar and is
         // fine. The caller's catch deletes the sidecar file itself.
         if (posRef.isDefined || keysRef.isDefined || delRef.isDefined) {
-          val raced = branchesOrPending().filter(b =>
-            branchBaseVersion(b).forall(_ < v))
+          val raced = branchesOrPending().filter(branchBaseVersion(_) < v)
           if (raced.nonEmpty) {
             WarehouseIO.delete(logFile(f"v$v%05d.list"))
             mergeManifest.foreach(n => WarehouseIO.delete(logFile(n)))
@@ -1086,15 +1067,17 @@ final class TableSink(val config: SinkConfig) {
   // a SMALL manifest-name list ("#manifests" header). Readers union the
   // deltas; K snapshots share manifests instead of storing K full file
   // lists; commit metadata IO is O(added files + manifest count), never
-  // O(table files). Legacy header-less snapshots (inline file lists) are
-  // still resolved, and migrate into a manifest the first time a commit
-  // chains off them. Appends never touch existing files, so every
-  // recorded snapshot stays readable. Rewriting ops (upsert / delete /
-  // compact) replace files in place, which invalidates earlier
-  // manifests — they EXPIRE the history (log resets to a single snapshot
-  // of the post-rewrite state), the same contract as Iceberg snapshot
-  // expiry after rewrite-files maintenance; [[compactManifests]] bounds
-  // the manifest count and [[gcManifests]] reclaims unreferenced deltas.
+  // O(table files). A version file also carries its commit's `#txn`
+  // record and `#pos`/`#keys`/`#del` delete-sidecar references
+  // ([[WarehouseIO.snapshotSidecarRefs]]). This class is the one reader
+  // of `_graft_log` names; [[GraftCatalog]] resolves through it. Appends
+  // never touch existing files, so every recorded snapshot stays
+  // readable. Rewriting ops (upsert / delete / compact) replace files in
+  // place, which invalidates earlier manifests — they EXPIRE the history
+  // (log resets to a single snapshot of the post-rewrite state), the same
+  // contract as Iceberg snapshot expiry after rewrite-files maintenance;
+  // [[compactManifests]] bounds the manifest count and [[gcManifests]]
+  // reclaims unreferenced deltas.
 
   // The snapshot log (_graft_log), every manifest/sidecar read-write, AND
   // the whole-table rewrite/swap protocols below go through
@@ -1322,12 +1305,10 @@ final class TableSink(val config: SinkConfig) {
     * touched. Snapshot-history storage therefore grows O(Σ live deltas),
     * not O(snapshots × table files). */
   private def gcManifests(): Unit = {
-    def namesOf(p: org.apache.hadoop.fs.Path): Seq[String] =
-      WarehouseIO.snapshotManifestNames(p).getOrElse(Nil)
     val live = (snapshotVersions().map(v => logFile(f"v$v%05d.list")) ++
       branches().flatMap(b => branchVersions(b).map(v =>
         new org.apache.hadoop.fs.Path(branchLogPath(b), f"v$v%05d.list")))
-      ).flatMap(namesOf).toSet
+      ).flatMap(WarehouseIO.snapshotManifestNames).toSet
     // an optimistic append writes its delta (and possibly base/merge)
     // manifest BEFORE claiming a version — "referenced by no snapshot"
     // is the normal transient state of an in-flight commit, and some GC
@@ -1361,12 +1342,9 @@ final class TableSink(val config: SinkConfig) {
       attempt += 1
       val head = snapshotVersions().last
       // line-preserving fold (stats entries survive the compaction)
-      val merged = manifestNames(head) match {
-        case Some(names) => WarehouseIO.writeManifestLines(logPath,
-          WarehouseIO.mergeManifestLines(
-            names.map(WarehouseIO.manifestLinesOf(logPath, _))))
-        case None => WarehouseIO.writeManifest(logPath, manifestFiles(head))
-      }
+      val merged = WarehouseIO.writeManifestLines(logPath,
+        WarehouseIO.mergeManifestLines(
+          manifestNames(head).map(WarehouseIO.manifestLinesOf(logPath, _))))
       if (WarehouseIO.writeStringIfAbsent(logFile(f"v${head + 1}%05d.list"),
           WarehouseIO.renderSnapshot(Seq(merged))))
         return head + 1
@@ -1381,19 +1359,22 @@ final class TableSink(val config: SinkConfig) {
   private def snapshotFile(version: Int): org.apache.hadoop.fs.Path = {
     val manifest = logFile(f"v$version%05d.list")
     require(WarehouseIO.exists(manifest),
-      s"snapshot v$version does not exist (expired by a rewrite, or never " +
-        s"committed); available: ${snapshotVersions().mkString(", ")}")
+      s"${config.tableName}: snapshot v$version does not exist (expired " +
+        "by a rewrite, or never committed); available: " +
+        snapshotVersions().mkString(", "))
     manifest
   }
 
-  /** Manifest names snapshot `version` references (None = legacy
-    * inline-list snapshot). O(manifest count) read — the cheap half of
-    * the layered format, enough for commit chaining, expiry GC, and
-    * per-version delta accounting without touching file lists. */
-  private def manifestNames(version: Int): Option[Seq[String]] =
+  /** Manifest names snapshot `version` references. O(manifest count)
+    * read — the cheap half of the layered format, enough for commit
+    * chaining, expiry GC, and per-version delta accounting without
+    * touching file lists. */
+  private def manifestNames(version: Int): Seq[String] =
     WarehouseIO.snapshotManifestNames(snapshotFile(version))
 
-  private def manifestFiles(version: Int): Seq[String] =
+  /** Table-relative data files snapshot `version` recorded (a shallow
+    * clone's source entries are absolute). */
+  private[graft] def manifestFiles(version: Int): Seq[String] =
     WarehouseIO.readSnapshotFiles(logPath, snapshotFile(version))
 
   /** Shallow-clone sidecar: the source table root whose ABSOLUTE manifest
@@ -1586,44 +1567,18 @@ final class TableSink(val config: SinkConfig) {
   // makes the delete O(metadata) and defers the rewrite until compaction
   // amortizes it across many deletes.
 
-  private def deletesPath(v: Int): org.apache.hadoop.fs.Path =
-    logFile(f"v$v%05d.deletes")
-
-  private def keysPath(v: Int): org.apache.hadoop.fs.Path =
-    logFile(f"v$v%05d_keys")
-
-  private def posDeletesPath(v: Int): org.apache.hadoop.fs.Path =
-    logFile(f"v$v%05d_pos")
-
-  /** ALL position-delete sidecar directories of version `v`: the
-    * standard post-claim `v%05d_pos` dir ([[deletePositions]] — whose
-    * lands-later window legally shows the PRE-delete state) plus a
-    * `#pos`-referenced sidecar committed ATOMICALLY inside the claimed
-    * snapshot (the merge-on-read [[updateMor]] shape — the commit also
-    * APPENDS replacement rows, so the subtraction may never lag the
-    * claim or a reader would see both copies). O(1) metadata reads. */
-  private def posDeleteDirs(v: Int): Seq[org.apache.hadoop.fs.Path] =
-    sidecarIndex().posDirs(v)
-
-  /** ONE-LISTING sidecar index: which versions carry which delete-sidecar
-    * flavors, resolved from a SINGLE log-directory listing instead of
-    * 3-4 metadata probes (and, for the `#pos` shape, a version-file
-    * READ) per version per read — measured: the per-version probes
-    * regressed q_rollback 2.2× the day they landed. `#pos` references
-    * (the MoR UPDATE/MERGE commit shape) cost a version-file read ONLY
-    * when some `pos-*` dir exists in the listing at all — on a table
-    * with no pending MoR mutation the index is one `listStatus`, full
-    * stop. An index is a point-in-time snapshot of the log, the same
-    * consistency class as the per-version stats it replaces (each was
-    * its own point-in-time probe anyway); hot paths build ONE index per
-    * logical read instead of re-probing per version. */
+  /** ONE-LISTING sidecar index: which versions carry which delete
+    * sidecars, resolved from a SINGLE log-directory listing. Every
+    * flavor pre-writes its sidecar under a unique name (`del-*` predicate
+    * file, `keys-*` erasure list, `pos-*` position list) and references
+    * it from the claimed version file ([[WarehouseIO.snapshotSidecarRefs]]),
+    * so a version file is read only when some such name exists in the
+    * listing at all — on a table with no pending merge-on-read delete the
+    * index is one `listStatus`, full stop (per-version probes measured a
+    * 2.2× q_rollback regression). An index is a point-in-time snapshot of
+    * the log; hot paths build ONE index per logical read. */
   private final class SidecarIndex {
     private val names: Set[String] = WarehouseIO.childNames(logPath).toSet
-    // ref-shaped sidecars (round-12: ALL delete flavors pre-write under
-    // a unique name and are referenced INSIDE the claimed snapshot —
-    // atomic, so a changelog consumer can never observe a version
-    // before its sidecar exists and lose the delta). Their presence in
-    // the ONE listing gates the per-version version-file reads.
     private val anyRef = names.exists(n => n.startsWith("pos-") ||
       n.startsWith("keys-") || n.startsWith("del-"))
     private val refCache = scala.collection.mutable.Map
@@ -1634,29 +1589,21 @@ final class TableSink(val config: SinkConfig) {
       else refCache.getOrElseUpdate(v,
         if (!names(f"v$v%05d.list")) (None, None, None)
         else WarehouseIO.snapshotSidecarRefs(logFile(f"v$v%05d.list")))
-    def hasPred(v: Int): Boolean =
-      names(f"v$v%05d.deletes") || refs(v)._3.exists(names)
-    /** Predicate SQL texts of version `v` (legacy std file and/or the
-      * `#del`-referenced sidecar), in commit shape order. */
+    /** Predicate SQL text of version `v`'s `#del` sidecar, if any. */
     def predicates(v: Int): Seq[String] =
-      (if (names(f"v$v%05d.deletes"))
-        Seq(WarehouseIO.readString(deletesPath(v))) else Nil) ++
-        refs(v)._3.filter(names)
-          .map(n => WarehouseIO.readString(logFile(n)))
+      refs(v)._3.filter(names).map(n => WarehouseIO.readString(logFile(n)))
+        .toSeq
     def keyDirs(v: Int): Seq[org.apache.hadoop.fs.Path] =
-      (if (names(f"v$v%05d_keys")) Seq(keysPath(v)) else Nil) ++
-        refs(v)._2.filter(names).map(logFile)
+      refs(v)._2.filter(names).map(logFile).toSeq
     def posDirs(v: Int): Seq[org.apache.hadoop.fs.Path] =
-      (if (names(f"v$v%05d_pos")) Seq(posDeletesPath(v)) else Nil) ++
-        refs(v)._1.filter(names).map(logFile)
+      refs(v)._1.filter(names).map(logFile).toSeq
     /** Referenced sidecar FILE/DIR names of `v` (cleanup loops must
       * capture these before deleting the version file). */
     def refNames(v: Int): Seq[String] = {
       val (p, k, d) = refs(v)
       (p.toSeq ++ k.toSeq ++ d.toSeq).filter(names)
     }
-    def any(v: Int): Boolean =
-      hasPred(v) || keyDirs(v).nonEmpty || posDirs(v).nonEmpty
+    def any(v: Int): Boolean = refNames(v).nonEmpty
   }
 
   private def sidecarIndex(): SidecarIndex = new SidecarIndex
@@ -1969,10 +1916,9 @@ final class TableSink(val config: SinkConfig) {
     val vs = snapshotVersions()
     val head = vs.last
     val idx = sidecarIndex()
-    // capture EVERY sidecar shape (standard files/dirs and the
-    // snapshot-referenced ones) up front — the cleanup loop below
-    // deletes version files before sidecars, after which a reference
-    // is unreadable
+    // capture every sidecar up front — the cleanup loop below deletes
+    // version files before sidecars, after which a reference is
+    // unreadable
     val predsByV = vs.map(v => v -> idx.predicates(v)).filter(_._2.nonEmpty)
     val keyDirsByV = vs.map(v => v -> idx.keyDirs(v)).filter(_._2.nonEmpty)
     val posDirsByV = vs.map(v => v -> idx.posDirs(v)).filter(_._2.nonEmpty)
@@ -2069,11 +2015,6 @@ final class TableSink(val config: SinkConfig) {
     val belowIdx = sidecarIndex()
     val refsBelow = below.flatMap(belowIdx.refNames)
     below.foreach(v => WarehouseIO.delete(logFile(f"v$v%05d.list")))
-    below.foreach { v =>
-      WarehouseIO.delete(deletesPath(v))
-      WarehouseIO.delete(keysPath(v), recursive = true)
-      WarehouseIO.delete(posDeletesPath(v), recursive = true)
-    }
     refsBelow.foreach(n => WarehouseIO.delete(logFile(n), recursive = true))
     WarehouseIO.delete(logFile("generation"))
     gcManifests() // deltas referenced only by the dropped history
@@ -2441,8 +2382,7 @@ final class TableSink(val config: SinkConfig) {
     // v1 after a rewriting op expires the log, so a bare number could
     // silently resume against a DIFFERENT history once the new head
     // catches up — the generation pin turns that divergence into a loud
-    // refusal. (A bare-integer cursor from an older build is accepted as
-    // generation-unknown.)
+    // refusal.
     val (curGen, from) =
       // `startingTimestampMs` (the stream sources' option, now on the
       // batch cursor too): a FRESH cursor floors at the last version
@@ -2454,7 +2394,6 @@ final class TableSink(val config: SinkConfig) {
         (gen, startingTimestampMs.flatMap(versionBefore).getOrElse(0))
       else WarehouseIO.readString(p).trim.split(':') match {
         case Array(g, v) => (g, v.toInt)
-        case Array(v) => (gen, v.toInt) // legacy bare-version cursor
         case other => sys.error(
           s"unreadable changelog cursor at $cursorPath: " +
             s"'${other.mkString(":")}'")
@@ -2699,14 +2638,11 @@ final class TableSink(val config: SinkConfig) {
     require(config.versioned && snapshotVersions().nonEmpty,
       "metaSnapshots needs a versioned table with at least one commit")
     val vs = snapshotVersions()
+    val namesByRank = vs.map(manifestNames)
     // rank = position in the RETAINED chain (expiry leaves gaps in the
     // version numbers; parent = previous retained version, as before)
-    val pairs: Seq[(Int, String)] = vs.zipWithIndex.flatMap { case (v, r) =>
-      manifestNames(v) match {
-        case Some(names) => names.map(n => r -> logFile(n).toString)
-        // legacy inline-list snapshot: the version file IS the file list
-        case None => Seq(r -> snapshotFile(v).toString)
-      }
+    val pairs: Seq[(Int, String)] = namesByRank.zipWithIndex.flatMap {
+      case (names, r) => names.map(n => r -> logFile(n).toString)
     }
     import spark.implicits._
     def stripScheme(s: String): String =
@@ -2765,15 +2701,13 @@ final class TableSink(val config: SinkConfig) {
       case ((v, r), parent) =>
         val (nAdded, nRemoved) = perRank.getOrElse(r, (0L, 0L))
         running += nAdded - nRemoved
-        val namesOpt = manifestNames(v)
         val committedMs = WarehouseIO.modifiedAtMs(logFile(f"v$v%05d.list"))
         // manifest-layer observability: how many delta manifests this
         // snapshot references (merge-on-commit / compactManifests fold
-        // shows as a drop to 1; 0 = legacy inline snapshot) and the
-        // streaming txn line, if the commit carried one
+        // shows as a drop to 1) and the streaming txn line, if the commit
+        // carried one
         (v.toLong, parent.map(_.toLong), new java.sql.Timestamp(committedMs),
-          running, nAdded, nRemoved,
-          namesOpt.map(_.size.toLong).getOrElse(0L),
+          running, nAdded, nRemoved, namesByRank(r).size.toLong,
           WarehouseIO.snapshotTxn(snapshotFile(v))
             .map { case (id, b) => s"$id#$b" })
     }
@@ -3000,15 +2934,10 @@ final class TableSink(val config: SinkConfig) {
         WarehouseIO.delete(new org.apache.hadoop.fs.Path(root, rel)))
     val rbIdx = sidecarIndex()
     snapshotVersions().filter(_ > version).foreach { v =>
-      WarehouseIO.delete(deletesPath(v))
       // snapshot-referenced sidecars resolve via the version file, so
-      // they are captured BEFORE it is deleted (the index covers every
-      // shape: std files/dirs plus #pos/#keys/#del references)
+      // they are captured BEFORE it is deleted
       rbIdx.refNames(v).foreach(n =>
         WarehouseIO.delete(logFile(n), recursive = true))
-      Seq(keysPath(v), posDeletesPath(v)).foreach { kd =>
-        if (WarehouseIO.isDir(kd)) WarehouseIO.delete(kd, recursive = true)
-      }
       WarehouseIO.delete(logFile(f"v$v%05d.list"))
     }
     gcManifests() // deltas referenced only by the rolled-off snapshots
@@ -3084,11 +3013,8 @@ final class TableSink(val config: SinkConfig) {
     * manifests in the MAIN log dir — creating a branch shares the head's
     * manifests instead of copying a file list, and a branch append
     * commits one delta manifest exactly like a main append. */
-  private def branchManifest(name: String, v: Int): Seq[String] =
+  private[graft] def branchManifest(name: String, v: Int): Seq[String] =
     WarehouseIO.readSnapshotFiles(logPath, branchSnapshotFile(name, v))
-
-  private def branchManifestNames(name: String, v: Int): Option[Seq[String]] =
-    WarehouseIO.snapshotManifestNames(branchSnapshotFile(name, v))
 
   private def branchHeadFiles(name: String): Seq[String] = {
     val vs = branchVersions(name)
@@ -3109,9 +3035,8 @@ final class TableSink(val config: SinkConfig) {
     require(branchVersions(name).isEmpty, s"branch '$name' already exists")
     val v = fromVersion.getOrElse(snapshotVersions().last)
     // share the snapshot's manifests by NAME (pure O(manifest count)
-    // metadata); a legacy inline snapshot migrates into one manifest
-    val names = manifestNames(v).getOrElse(
-      Seq(WarehouseIO.writeManifest(logPath, manifestFiles(v))))
+    // metadata)
+    val names = manifestNames(v)
     // base BEFORE v1: the two-slice read must never see a branch whose
     // base slice it cannot scope (sidecar commits are refused while the
     // branch lives, so the set "sidecars <= base" is frozen from here)
@@ -3122,14 +3047,12 @@ final class TableSink(val config: SinkConfig) {
       WarehouseIO.renderSnapshot(names))
   }
 
-  /** The main-snapshot version branch `name` was created at; None for a
-    * pre-round-12 branch (creatable only with zero pending sidecars, so
-    * the two-slice read never needs the base for one). */
-  private[graft] def branchBaseVersion(name: String): Option[Int] = {
-    val p = new org.apache.hadoop.fs.Path(branchLogPath(name), "base")
-    if (WarehouseIO.isFile(p)) Some(WarehouseIO.readString(p).trim.toInt)
-    else None
-  }
+  /** The main-snapshot version branch `name` was created at, from the
+    * `base` file [[createBranch]] writes before the branch's v1 — every
+    * live or mid-creation branch has one. */
+  private[graft] def branchBaseVersion(name: String): Int =
+    WarehouseIO.readString(
+      new org.apache.hadoop.fs.Path(branchLogPath(name), "base")).trim.toInt
 
   /** Append `df` to branch `name`: the physical write is identical to
     * [[append]] (coerce → derive → cluster → land files in the table
@@ -3149,10 +3072,9 @@ final class TableSink(val config: SinkConfig) {
     while (!committed) {
       attempt += 1
       val headV = branchVersions(name).last
-      // O(manifest count) head read, same layered protocol as main; a
-      // legacy inline branch head migrates into one manifest on the way
-      val headNames = branchManifestNames(name, headV).getOrElse(
-        Seq(WarehouseIO.writeManifest(logPath, branchManifest(name, headV))))
+      // O(manifest count) head read, same layered protocol as main
+      val headNames = WarehouseIO.snapshotManifestNames(
+        branchSnapshotFile(name, headV))
       committed = WarehouseIO.writeStringIfAbsent(
         new org.apache.hadoop.fs.Path(
           branchLogPath(name), f"v${headV + 1}%05d.list"),
@@ -3180,15 +3102,13 @@ final class TableSink(val config: SinkConfig) {
     * stable for the audit's lifetime. */
   def readBranch(spark: SparkSession, name: String): DataFrame = {
     val head = branchHeadFiles(name)
-    branchBaseVersion(name).filter(hasPendingDeletes) match {
-      case None => readFiles(spark, head)
-      // capturePos, like every other applyDeletes call site (round-14):
-      // a branch over a mixed-spine or clone manifest is a
-      // multi-relation union, where a position sidecar's `_metadata`
-      // fold is unresolvable unless captured per relation
-      case Some(b) => applyDeletes(readFiles(spark, head,
-        capturePos = true), b)
-    }
+    val base = branchBaseVersion(name)
+    if (!hasPendingDeletes(base)) readFiles(spark, head)
+    // capturePos, like every other applyDeletes call site (round-14): a
+    // branch over a mixed-spine or clone manifest is a multi-relation
+    // union, where a position sidecar's `_metadata` fold is unresolvable
+    // unless captured per relation
+    else applyDeletes(readFiles(spark, head, capturePos = true), base)
   }
 
   /** Publish: main's next snapshot becomes `current main head + the files
@@ -4823,13 +4743,10 @@ final class TableSink(val config: SinkConfig) {
       .foldLeft((Map.empty[String, Int], Set.empty[String])) {
         case ((seen, seenNames), v) =>
           val names = manifestNames(v)
-          val files = names match {
-            case Some(ns) => ns.filterNot(seenNames)
-              .flatMap(WarehouseIO.manifestFilesOf(logPath, _))
-            case None => manifestFiles(v)
-          }
+          val files = names.filterNot(seenNames)
+            .flatMap(WarehouseIO.manifestFilesOf(logPath, _))
           (seen ++ files.filterNot(seen.contains).map(_ -> v),
-            seenNames ++ names.getOrElse(Nil))
+            seenNames ++ names)
       }._1
     val pairs = introduced.toSeq.map { case (rel, v) =>
       val abs =

@@ -365,14 +365,14 @@ private[graft] object WarehouseIO {
 
   // ------------------------------------------- layered snapshot format
   // Iceberg's manifest-list layering (reference README.md:95-105 places
-  // the connector on exactly this commit model): a snapshot file is a
+  // the connector on exactly this commit model): a snapshot file
+  // (`vNNNNN.list`) opens with the `#manifests` header, then carries
+  // `#`-prefixed metadata lines (`#txn`, `#pos`, `#keys`, `#del`) and a
   // SMALL list of immutable manifest names; each manifest holds the
   // data-file paths ONE commit added. Commit metadata IO is therefore
   // O(added files + manifest count), never O(table files), and K
   // snapshots share manifests instead of storing K full copies. A
-  // LEGACY snapshot (no header) inlines its file list — readers accept
-  // both, so pre-layering tables and hand-planted version files keep
-  // resolving.
+  // snapshot file without the header is refused, naming the file.
 
   /** First line of a layered (manifest-list) snapshot file. */
   val SnapshotHeader = "#manifests"
@@ -437,15 +437,19 @@ private[graft] object WarehouseIO {
     (SnapshotHeader +: (metadata.map("#" + _) ++ manifestNames))
       .mkString("\n")
 
-  /** Manifest names of a layered snapshot file, in commit order; None
-    * for a legacy inline-list snapshot. `#`-prefixed metadata lines are
-    * not names. O(manifest count) read. */
-  def snapshotManifestNames(snapshotPath: HPath): Option[Seq[String]] = {
-    val lines = readString(snapshotPath).split("\n", -1).toIndexedSeq
-    if (lines.headOption.contains(SnapshotHeader))
-      Some(lines.tail.filter(l => l.nonEmpty && !l.startsWith("#")))
-    else None
+  /** The lines after the header of snapshot file `snapshotPath`; fails
+    * naming the file when the `#manifests` header is missing. */
+  private def snapshotLines(snapshotPath: HPath): IndexedSeq[String] = {
+    val lines = readString(snapshotPath).split("\n").toIndexedSeq
+    require(lines.headOption.contains(SnapshotHeader),
+      s"snapshot file $snapshotPath has no $SnapshotHeader header")
+    lines.tail
   }
+
+  /** Manifest names of a snapshot file, in commit order. `#`-prefixed
+    * metadata lines are not names. O(manifest count) read. */
+  def snapshotManifestNames(snapshotPath: HPath): Seq[String] =
+    snapshotLines(snapshotPath).filter(l => l.nonEmpty && !l.startsWith("#"))
 
   /** Stream ids default to checkpoint PATHS, which may contain spaces —
     * and the txn line is space-delimited inside a line-oriented snapshot
@@ -462,66 +466,32 @@ private[graft] object WarehouseIO {
     .replace("%0D", "\r").replace("%0A", "\n")
     .replace("%20", " ").replace("%25", "%")
 
-  /** The `#txn <streamId> <batchId>` metadata line of a layered
-    * snapshot, if any — the exactly-once dedup record a streaming
-    * commit embeds atomically in its claimed snapshot. The id token is
+  /** The `#txn <streamId> <batchId>` metadata line of a snapshot, if
+    * any — the exactly-once dedup record a streaming commit embeds
+    * atomically in its claimed snapshot. The id token is
     * [[encodeTxnId]]-escaped on disk. */
-  def snapshotTxn(snapshotPath: HPath): Option[(String, Long)] = {
-    val lines = readString(snapshotPath).split("\n").toIndexedSeq
-    if (!lines.headOption.contains(SnapshotHeader)) return None
-    lines.tail.find(_.startsWith("#txn ")).flatMap { l =>
+  def snapshotTxn(snapshotPath: HPath): Option[(String, Long)] =
+    snapshotLines(snapshotPath).find(_.startsWith("#txn ")).flatMap { l =>
       l.stripPrefix("#txn ").split(" ") match {
         case Array(id, b) => b.toLongOption.map(decodeTxnId(id) -> _)
         case _ => None
       }
     }
-  }
 
-  /** The `#pos <sidecarDirName>` metadata line of a layered snapshot, if
-    * any — a position-delete sidecar committed ATOMICALLY inside the
-    * claimed snapshot (the merge-on-read UPDATE/MERGE commit shape:
-    * replacement appends and the subtraction of the replaced rows land
-    * in one snapshot, so no reader window shows both copies). */
-  def snapshotPosRef(snapshotPath: HPath): Option[String] =
-    snapshotMetaValue(snapshotPath, "pos")
-
-  /** `#keys <sidecarDirName>` — an erasure-list sidecar committed
-    * atomically inside the claimed snapshot (round-12: ALL delete
-    * flavors moved to pre-written, in-snapshot-referenced sidecars — a
-    * lands-later sidecar is legal for snapshot readers, which see the
-    * pre-delete state, but a CHANGELOG consumer reading the version in
-    * that window emits an empty change and advances its offset past the
-    * delete, losing it forever). */
-  def snapshotKeysRef(snapshotPath: HPath): Option[String] =
-    snapshotMetaValue(snapshotPath, "keys")
-
-  /** `#del <sidecarFileName>` — a predicate-delete sidecar (a pre-written
-    * `del-*` file holding the SQL text) committed atomically inside the
-    * claimed snapshot. The file — rather than in-lining the SQL — keeps
-    * the one-listing index contract: `del-*` names in the log listing
-    * gate the version-file reads that resolve which version owns which
-    * sidecar, exactly like `pos-*`/`keys-*`. */
-  def snapshotDelRef(snapshotPath: HPath): Option[String] =
-    snapshotMetaValue(snapshotPath, "del")
-
-  /** All three sidecar references of a snapshot in ONE file read:
-    * (`#pos`, `#keys`, `#del`). */
+  /** The three delete-sidecar references of a snapshot in ONE file read:
+    * (`#pos`, `#keys`, `#del`). Every delete flavor pre-writes its
+    * sidecar under a unique name (`pos-*` dir, `keys-*` dir, `del-*`
+    * file holding the predicate SQL) and the commit references it from
+    * the claimed snapshot, so the subtraction is atomic with the claim:
+    * a changelog consumer can never observe the version before its
+    * sidecar exists and advance past the delete. */
   def snapshotSidecarRefs(snapshotPath: HPath)
       : (Option[String], Option[String], Option[String]) = {
-    val lines = readString(snapshotPath).split("\n").toIndexedSeq
-    if (!lines.headOption.contains(SnapshotHeader)) return (None, None, None)
-    def v(key: String): Option[String] = lines.tail
+    val lines = snapshotLines(snapshotPath)
+    def v(key: String): Option[String] = lines
       .find(_.startsWith(s"#$key "))
       .map(_.stripPrefix(s"#$key ").trim).filter(_.nonEmpty)
     (v("pos"), v("keys"), v("del"))
-  }
-
-  private def snapshotMetaValue(snapshotPath: HPath,
-      key: String): Option[String] = {
-    val lines = readString(snapshotPath).split("\n").toIndexedSeq
-    if (!lines.headOption.contains(SnapshotHeader)) return None
-    lines.tail.find(_.startsWith(s"#$key "))
-      .map(_.stripPrefix(s"#$key ").trim).filter(_.nonEmpty)
   }
 
   /** Driver-side manifest CONTENT reads since process start (names-only
@@ -537,17 +507,13 @@ private[graft] object WarehouseIO {
   def manifestFilesOf(logDir: HPath, name: String): IndexedSeq[String] =
     manifestLinesOf(logDir, name).map(manifestLinePath)
 
-  /** Resolve a snapshot file to its full data-file list: layered → the
-    * union of its manifests (resolved against `logDir` — branch
-    * snapshots reference manifests in the MAIN log dir); legacy → the
-    * inline list. Deduped and sorted for deterministic reads. */
+  /** Resolve a snapshot file to its full data-file list: the union of
+    * its manifests (resolved against `logDir` — branch snapshots
+    * reference manifests in the MAIN log dir). Deduped and sorted for
+    * deterministic reads. */
   def readSnapshotFiles(logDir: HPath, snapshotPath: HPath): Seq[String] =
-    snapshotManifestNames(snapshotPath) match {
-      case Some(names) =>
-        names.flatMap(manifestFilesOf(logDir, _)).distinct.sorted
-      case None =>
-        readString(snapshotPath).split("\n").filter(_.nonEmpty).toIndexedSeq
-    }
+    snapshotManifestNames(snapshotPath)
+      .flatMap(manifestFilesOf(logDir, _)).distinct.sorted
 
   /** Recursively list DATA files under `root` as root-relative paths:
     * any path with a `_`- or `.`-prefixed segment (metadata dirs such as

@@ -1028,4 +1028,22 @@ class CatalogSpec extends AnyFunSuite {
       spark.sql("ALTER TABLE gtest.ttdrop RENAME COLUMN v TO tag"))
     assert(e3.getMessage.contains("resurrect"), e3.getMessage)
   }
+
+  test("a SELECT through the catalog over one pending merge-on-read " +
+    "sidecar takes a pinned number of log listings and metadata reads") {
+    // the pins are the counts measured before the catalog delegated its
+    // log reads to TableSink: the delegation may not add metadata IO, and
+    // a change that removes some lowers the pins on purpose
+    val sink = mkVersioned("ttio")
+    sink.deleteWhere("id = 1")
+    val l0 = WarehouseIO.dirListings.get()
+    val r0 = WarehouseIO.metaReads.get()
+    val ids = spark.sql("SELECT id FROM gtest.ttio").as[Long].collect()
+    val listings = WarehouseIO.dirListings.get() - l0
+    val reads = WarehouseIO.metaReads.get() - r0
+    assert(ids.sorted.toSeq == Seq(2L, 3L, 4L, 5L))
+    assert(listings == 6 && reads == 14,
+      s"SQL-door metadata IO moved: $listings listings (pin 6), " +
+        s"$reads metadata reads (pin 14)")
+  }
 }

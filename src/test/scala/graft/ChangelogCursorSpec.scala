@@ -129,12 +129,10 @@ class ChangelogCursorSpec extends AnyFunSuite {
     src.replicateTo(spark, replica, Seq("id"), cursor)
     def pendingSidecars(): Int = {
       val logDir = new HPath(s"${replica.config.tablePath}/_graft_log")
-      // both sidecar shapes count: legacy std files/dirs and the
-      // round-12 snapshot-referenced `del-`/`keys-`/`pos-` names
-      WarehouseIO.childNames(logDir).count(nm =>
-        nm.endsWith(".deletes") || nm.endsWith("_keys") ||
-          nm.endsWith("_pos") || nm.startsWith("del-") ||
-          nm.startsWith("keys-") || nm.startsWith("pos-"))
+      // every delete flavor is a snapshot-referenced `del-`/`keys-`/`pos-`
+      // entry
+      WarehouseIO.childNames(logDir).count(nm => nm.startsWith("del-") ||
+        nm.startsWith("keys-") || nm.startsWith("pos-"))
     }
     // one delete-only source commit per cycle -> one key-list sidecar
     // per apply; without consolidation the replica would accumulate
@@ -166,7 +164,7 @@ class ChangelogCursorSpec extends AnyFunSuite {
     }
     val logDir0 = new HPath(s"${replica0.config.tablePath}/_graft_log")
     assert(WarehouseIO.childNames(logDir0)
-      .count(nm => nm.endsWith("_keys") || nm.startsWith("keys-")) == 4,
+      .count(_.startsWith("keys-")) == 4,
       "threshold 0 must leave every sidecar in place")
     assert(replica0.read(spark).select($"id").as[Long].collect().toSet
       == Set(5L, 6L))
@@ -406,7 +404,8 @@ class ChangelogCursorSpec extends AnyFunSuite {
     val sink = mkSink("cc3")
     sink.append(Seq((1L, "a", 10.0)).toDF("id", "cat", "v"))
     val cursor = s"$wh/cc3_cursor"
-    WarehouseIO.writeString(new org.apache.hadoop.fs.Path(cursor), "9")
+    WarehouseIO.writeString(new org.apache.hadoop.fs.Path(cursor),
+      s"${sink.logGeneration()}:9")
     val e = intercept[IllegalArgumentException](
       sink.readChangelogSince(spark, cursor))
     assert(e.getMessage.contains("delete the cursor"), e.getMessage)

@@ -185,6 +185,39 @@ class DedupSpec extends AnyFunSuite {
     assert(recall >= 0.9, s"minhash recall $recall over ${exact.size} exact pairs")
   }
 
+  test("MinHash lanes are independent: seeded pairs at Jaccard 0.84 are " +
+    "never missed by 16x4 banding and the estimate spread is binomial") {
+    // lanes a_i·fp + b_i linear in i (a_i = c·(i+1)) are all affine images
+    // of one hash: their minima move together, so the estimate's spread
+    // nearly doubles and banding misses pairs it should catch
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    val rnd = new scala.util.Random(84)
+    def word(): String = rnd.alphanumeric.take(8).mkString
+    def sig(shingles: Seq[String]): Array[Long] =
+      VectorExpressions.MinhashSig(
+        Literal.create(shingles, ArrayType(StringType)), 64)
+        .eval().asInstanceOf[ArrayData].toLongArray()
+    // 51 shared + 5 own shingles per side: J = 51 / 61 ≈ 0.836
+    val pairs = (1 to 2000).map { _ =>
+      val shared = Seq.fill(51)(word())
+      val a = sig(shared ++ Seq.fill(5)(word()))
+      val b = sig(shared ++ Seq.fill(5)(word()))
+      val banded = (0 until 16).exists(band =>
+        (0 until 4).forall(r => a(band * 4 + r) == b(band * 4 + r)))
+      val est = (0 until 64).count(i => a(i) == b(i)) / 64.0
+      (banded && est >= 0.5, est)
+    }
+    val missed = pairs.count(!_._1)
+    val mean = pairs.map(_._2).sum / pairs.size
+    val sd = math.sqrt(pairs.map(p => (p._2 - mean) * (p._2 - mean)).sum /
+      pairs.size)
+    // binomial theory: sqrt(j(1-j)/64) ≈ 0.046; P(miss) ≈ (1-j^4)^16 ≈ 2e-5
+    assert(missed == 0, s"LSH missed $missed of 2000 pairs at J≈0.84")
+    assert(sd < 0.06, f"estimate SD $sd%.3f (mean $mean%.3f) is not binomial")
+  }
+
   test("simhash banding finds the bulk of exact near-dup pairs") {
     val exact = pairSet(Dedup.ngramJaccard(docs, threshold = 0.7))
     val sh = pairSet(Dedup.simhashPairs(docs, maxDist = 3))

@@ -539,38 +539,6 @@ class LayoutSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.session.timeZone", prev)
   }
 
-  test("a LEGACY session-rendered timestamp zone entry is unparseable-" +
-    "absolutely and must KEEP its file, never prune it") {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val sink = new TableSink(SinkConfig(tableName = "tzlegacy",
-      warehousePath = tmpWarehouse(), versioned = true))
-    def ts(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
-    sink.append(Seq((1L, ts("2024-03-10T05:00:00Z"))).toDF("id", "t"))
-    new ZoneMaps(sink).analyze(spark, Seq("t"))
-    // rewrite the manifest entry into the PRE-fix rendered form
-    val logDir = new HPath(s"${sink.config.tablePath}/_graft_log")
-    WarehouseIO.childNames(logDir)
-      .filter(n => n.startsWith("m-") && n.endsWith(".mf")).foreach { n =>
-        val p = new HPath(logDir, n)
-        val rewritten = WarehouseIO.readString(p)
-          .replaceAll("\"t\":\\[\"-?\\d+\",\"-?\\d+\"\\]",
-            "\"t\":[\"2024-03-10 05:00:00\",\"2024-03-10 05:00:00\"]")
-        WarehouseIO.writeStringAtomic(p, rewritten)
-      }
-    val zm = new ZoneMaps(sink)
-    // bounds that DO contain the row: the legacy entry must not prune it
-    val (files, pruned) = zm.candidates(spark,
-      Seq(("t", lit("2024-03-01T00:00:00Z").cast("timestamp"),
-        lit("2024-03-31T00:00:00Z").cast("timestamp"))))
-    assert(pruned == 0 && files.size == 1,
-      "a legacy-rendered bound is not absolutely parseable — the file " +
-        "must read as unanalyzed (kept), not be pruned on a guessed zone")
-    assert(zm.readBetween(spark,
-      ("t", lit("2024-03-01T00:00:00Z").cast("timestamp"),
-        lit("2024-03-31T00:00:00Z").cast("timestamp")))
-      .count() == 1)
-  }
-
   test("appendClustered preserves the range layout the normal append undoes") {
     val df = spark.range(4096).select($"id", ($"id" % 64).as("k"))
     val clustered = ZOrder.cluster(df, Seq(("k", 0L, 63L)), nRanges = 8)

@@ -133,7 +133,7 @@ class MaintenancePropertySpec extends AnyFunSuite {
         .filter(n => n.startsWith("m-") && n.endsWith(".mf")).toSet
       val referenced = sink.snapshotVersions().flatMap(v =>
         WarehouseIO.snapshotManifestNames(
-          new HPath(log, f"v$v%05d.list")).getOrElse(Nil)).toSet
+          new HPath(log, f"v$v%05d.list"))).toSet
       assert(onDisk == referenced,
         s"trial $trial: manifest debris ${onDisk -- referenced} / " +
           s"dangling ${referenced -- onDisk}")
